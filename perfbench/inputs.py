@@ -5,10 +5,11 @@ program will read plus a ``meta.json`` of input properties, and a later run
 with the same seed reuses them.  Every byte is a pure function of the seed,
 so the same seed gives byte-identical files and another seed different ones.
 
-Both corpora fix their shape exactly (document count, media-span count,
-share of heavy / duplicate / low-quality documents) so that a different seed
-changes *which* documents are drawn but not how much work they are; only
-per-item sizes (image dimensions, text lengths) still vary with the seed.
+Both corpora fix their shape (document count; media-span count and heavy
+documents for seal-batch; near-duplicate count for curate-text) so that a
+different seed changes *which* documents are drawn but hardly how much work
+they are; per-item sizes (image dimensions, text lengths) and the few exact
+duplicates of curate-text still vary with the seed.
 """
 
 from __future__ import annotations
@@ -29,13 +30,23 @@ SEAL_HEAVY_SHARE = 0.02
 # datagen: light documents have 1-12 spans, heavy ones 20-40
 HEAVY_MIN_SPANS = 20
 
-# curate-text: documents per job and the composition of the sample.
-CURATE_DOCS = 400
-CURATE_LOW_QUALITY_SHARE = 0.08
-CURATE_EXACT_DUP_SHARE = 0.06
-CURATE_NEAR_DUP_SHARE = 0.08
-
-_STOPWORDS = ["the", "and", "of", "to", "a"]
+# curate-text: documents per job, and the shape of the documents table the
+# curation job reads (documents.parquet of the sf0.1 test data: 5000 docs of
+# 10-100 whitespace-separated tokens, uniform, drawn uniformly from 30 words
+# with no punctuation; 250 docs (5%) are another doc's text plus " dup", the
+# source drawn with replacement, so a source drawn twice leaves one exact
+# duplicate pair; every doc passes the quality gate).
+CURATE_DOCS = 1000
+CURATE_TOKENS = (10, 100)
+CURATE_NEAR_DUP_SHARE = 0.05
+# near-duplicate sources have at least this many tokens, so every planted
+# pair has shingle Jaccard >= 28/29 and the engine's MinHash-LSH stage
+# (8 bands of 4 rows) misses one with probability below 1e-7
+CURATE_MIN_SOURCE_TOKENS = 30
+CURATE_VOCAB = (
+    "a agg batch big column customer data fast filter group hash join key line merge "
+    "order part query row scan slow small sort spark stream table the value vector "
+    "window").split()
 
 
 def _rng(seed: int, key: str) -> np.random.Generator:
@@ -124,41 +135,19 @@ def seal_media(docs: list[dict], seed: int) -> dict[str, bytes]:
 # ---------------------------------------------------------------------------
 
 
-def _vocabulary(seed: int) -> list[str]:
-    rng = _rng(seed, "vocab")
-    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
-    words = set()
-    while len(words) < 400:
-        n = int(rng.integers(3, 9))
-        words.add("".join(rng.choice(letters, size=n)))
-    return sorted(words)
-
-
 def curate_documents_rows(seed: int, n_docs: int = CURATE_DOCS) -> list[dict]:
-    """``(doc_id, text)`` rows: unique documents plus exact counts of
-    low-quality docs (too short to pass the quality gate), exact duplicates
-    (case / whitespace variants of a unique doc) and near duplicates (a
-    unique doc with one word appended, shingle Jaccard >= 0.96)."""
+    """``(doc_id, text)`` rows in the shape of the test data's documents
+    table: base documents, plus ``round(0.05 * n_docs)`` near duplicates
+    (a base document with " dup" appended); doc ids are shuffled."""
     rng = _rng(seed, "curate")
-    vocab = _vocabulary(seed) + _STOPWORDS * 10
-    n_low = round(CURATE_LOW_QUALITY_SHARE * n_docs)
-    n_exact = round(CURATE_EXACT_DUP_SHARE * n_docs)
     n_near = round(CURATE_NEAR_DUP_SHARE * n_docs)
-    n_base = n_docs - n_low - n_exact - n_near
-
-    def words(n):
-        return [vocab[int(k)] for k in rng.integers(0, len(vocab), size=n)]
-
-    base = [" ".join(words(int(rng.integers(60, 120)))) for _ in range(n_base)]
-    texts = list(base)
-    # low quality: three long tokens (score 6 + 0 + 10 < 30)
-    for _ in range(n_low):
-        texts.append(" ".join("".join(words(3)) for _ in range(3)))
-    for j in rng.choice(n_base, size=n_exact, replace=False):
-        t = base[int(j)]
-        texts.append(t.upper() if rng.random() < 0.5 else t.replace(" ", "  ", 3))
-    for j in rng.choice(n_base, size=n_near, replace=False):
-        texts.append(base[int(j)] + " " + words(1)[0])
+    lo, hi = CURATE_TOKENS
+    vocab = np.array(CURATE_VOCAB)
+    base = [" ".join(vocab[rng.integers(0, len(vocab), size=int(rng.integers(lo, hi + 1)))])
+            for _ in range(n_docs - n_near)]
+    sources = [t for t in base if t.count(" ") + 1 >= CURATE_MIN_SOURCE_TOKENS]
+    texts = base + [sources[int(j)] + " dup"
+                    for j in rng.integers(0, len(sources), size=n_near)]
     ids = rng.permutation(n_docs)
     return sorted(({"doc_id": int(ids[k]), "text": t} for k, t in enumerate(texts)),
                   key=lambda r: r["doc_id"])

@@ -8,12 +8,13 @@ per document; a pool of spawn workers spreads the documents after the timed
 phase is over.
 
 curate-text: the funnel must equal the q35 DuckDB oracle SQL applied to the
-benchmark's own input rows.  Stages 0-3 are that SQL verbatim (minus its
-``doc_id < 150`` filter); the SQL's stage-4 count is computed here from the
-stage-3 rows by exact all-pairs shingle Jaccard plus union-find, which is
-what the engine's MinHash-LSH stage finds whenever every planted near
-duplicate has Jaccard >= 0.96 (the generator guarantees that; the chance
-that 8 bands of 4 rows all miss such a pair is below 1e-6).
+benchmark's own input rows.  Stages 0-3 are that SQL, taken from
+``plans/generated_oracles.py`` with its ``doc_id < 150`` filter dropped; its
+stage-4 constant is replaced by a count computed here from the stage-3 rows
+by exact shingle Jaccard over every pair plus union-find.  That is what the
+engine's MinHash-LSH stage finds whenever every planted near duplicate has
+Jaccard >= 28/29 (the generator guarantees that; the chance that 8 bands of
+4 rows all miss such a pair is below 1e-7).
 """
 
 from __future__ import annotations
@@ -97,48 +98,20 @@ def check_extraction(output_rows: list[dict], expected: dict[str, tuple]) -> dic
 # curate-text: the q35 funnel
 # ---------------------------------------------------------------------------
 
-# q35 stages 0-3 (plans/generated_oracles.py) over the table ``documents``,
-# with the stage-4 count passed in as a parameter
-Q35_STAGE3_SQL = r"""
-    WITH input AS (
-        SELECT doc_id, text FROM documents
-    ), q AS (
-        SELECT doc_id, text,
-               CASE WHEN length(trim(text)) = 0 THEN 0
-                    ELSE len(string_split_regex(trim(text), '\s+')) END AS toks,
-               length(text) AS chars,
-               (len(list_filter(string_split_regex(lower(text), '\s+'), t -> list_contains(['the', 'and', 'of', 'to', 'a'], t)))) AS stop_hits,
-               length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS punct
-        FROM input
-    ), scored AS (
-        SELECT doc_id, text, toks,
-               CASE WHEN toks > 0 THEN CAST(FLOOR(chars * 100 / toks) AS INT)
-                    ELSE 0 END AS mean_tok,
-               CASE WHEN toks > 0 THEN CAST(FLOOR(stop_hits * 100 / toks) AS INT)
-                    ELSE 0 END AS stopword_pct
-        FROM q
-    ), stage2 AS (
-        SELECT doc_id, text FROM scored
-        WHERE (CASE WHEN toks >= 20 THEN 40 ELSE toks * 2 END)
-              + LEAST(30, stopword_pct)
-              + (CASE WHEN mean_tok BETWEEN 300 AND 900 THEN 30 ELSE 10 END) >= 30
-    ), stage3 AS (
-        SELECT MIN(doc_id) AS doc_id
-        FROM (SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS f
-              FROM stage2)
-        GROUP BY f
-    )
-"""
 
-Q35_FUNNEL_SQL = Q35_STAGE3_SQL + """
-    SELECT stage, docs FROM (
-        SELECT '0_input' AS stage, (SELECT COUNT(*) FROM input) AS docs
-        UNION ALL SELECT '1_lang', (SELECT COUNT(*) FROM input)
-        UNION ALL SELECT '2_quality', (SELECT COUNT(*) FROM stage2)
-        UNION ALL SELECT '3_exact_dedup', (SELECT COUNT(*) FROM stage3)
-        UNION ALL SELECT '4_near_dedup', $stage4
-    ) ORDER BY stage
-"""
+def q35_sql() -> tuple[str, str]:
+    """(stage 0-3 CTEs, full funnel query) of the repository's q35 oracle
+    SQL over the table ``documents``, with its ``doc_id < 150`` filter
+    dropped and its stage-4 constant replaced by the parameter ``$stage4``."""
+    from red_seal_ocr_spark.plans.generated_oracles import GENERATED_ORACLE_SQL
+
+    sql, n = re.subn(r"FROM documents WHERE doc_id < \d+", "FROM documents",
+                     GENERATED_ORACLE_SQL["q35_curate_funnel"])
+    sql, m = re.subn(r"SELECT '4_near_dedup', \d+", "SELECT '4_near_dedup', $stage4", sql)
+    if (n, m) != (1, 1):
+        raise ValueError("q35_curate_funnel no longer has the expected shape")
+    return sql[: sql.rindex("SELECT stage, docs FROM (")], sql
+
 
 # Java's \s (Spark splits on the JVM): Python's \s would also match
 # unicode whitespace
@@ -156,9 +129,19 @@ def shingles(text: str, k: int = 3) -> set[str]:
 
 def near_dedup_survivors(rows: dict[int, str], min_jaccard_pct: int = 80) -> set[int]:
     """Ids kept after clustering pairs with integer Jaccard percent >= the
-    threshold and keeping each cluster's minimum id."""
+    threshold and keeping each cluster's minimum id.  Every pair sharing a
+    shingle is scored exactly (a pair sharing none has Jaccard 0)."""
     ids = sorted(rows)
     sh = {i: shingles(rows[i]) for i in ids}
+    postings: dict[str, list[int]] = {}
+    for i in ids:
+        for s in sh[i]:
+            postings.setdefault(s, []).append(i)
+    inter: dict[tuple[int, int], int] = {}
+    for members in postings.values():
+        for ia, a in enumerate(members):
+            for b in members[ia + 1 :]:
+                inter[a, b] = inter.get((a, b), 0) + 1
     parent = {i: i for i in ids}
 
     def find(x):
@@ -167,13 +150,11 @@ def near_dedup_survivors(rows: dict[int, str], min_jaccard_pct: int = 80) -> set
             x = parent[x]
         return x
 
-    for ia, a in enumerate(ids):
-        for b in ids[ia + 1 :]:
-            inter = len(sh[a] & sh[b])
-            if inter and int(100 * inter / len(sh[a] | sh[b])) >= min_jaccard_pct:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
+    for (a, b), n in inter.items():
+        if int(100 * n / (len(sh[a]) + len(sh[b]) - n)) >= min_jaccard_pct:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
     return {i for i in ids if find(i) == i}
 
 
@@ -186,11 +167,11 @@ def reference_funnel(rows: list[dict]) -> tuple[dict[str, int], set[int]]:
     try:
         con.register("documents", pa.Table.from_pylist(
             rows, schema=pa.schema([("doc_id", pa.int64()), ("text", pa.string())])))
-        stage3_ids = [r[0] for r in con.execute(
-            Q35_STAGE3_SQL + " SELECT doc_id FROM stage3").fetchall()]
+        ctes, funnel_sql = q35_sql()
+        stage3_ids = [r[0] for r in con.execute(ctes + " SELECT doc_id FROM stage3").fetchall()]
         texts = {r["doc_id"]: r["text"] for r in rows}
         kept = near_dedup_survivors({i: texts[i] for i in stage3_ids})
-        funnel = dict(con.execute(Q35_FUNNEL_SQL, {"stage4": len(kept)}).fetchall())
+        funnel = dict(con.execute(funnel_sql, {"stage4": len(kept)}).fetchall())
     finally:
         con.close()
     return funnel, kept

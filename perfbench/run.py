@@ -10,18 +10,19 @@ Workloads and metrics are listed in ``BENCHMARK.json``.  One run:
 1. generates the inputs for ``(workload, seed)`` into ``.perfbench/inputs``
    (cached; never timed);
 2. sets up: starts the Spark session (``local[k]``, k = min(4, nproc)) and
-   runs the workload's job ``warmup_passes`` times, so JIT compilation and
-   Python worker start-up are done before timing; ``setup_s`` is that whole
-   set-up, measured once per run: a set-up costs 25-60 s, so repeating it
-   would not fit the run budget;
+   runs the workload's job once as warm-up, so JIT compilation and Python
+   worker start-up are done before timing; ``setup_s`` is that whole
+   set-up, measured once per run: a cold set-up costs 20-45 s, so repeating
+   it would make a run several times longer;
 3. runs timed jobs back to back (closed loop, one caller) for about
-   ``--seconds`` seconds, at least one;
-4. with ``--trace 1``, runs the timed phase again, alternating untraced
-   jobs with jobs that record spans around the calls into each layer,
-   reads Spark's per-stage metrics of the traced calls,
-   replays the workload's media bytes single-process through the codec and
-   kernel functions, and runs one job at ``local[1]`` (right after the
-   restart, so it includes one Python worker's start-up);
+   ``--seconds`` seconds and at least ``MIN_JOBS`` jobs; ``job_s`` and
+   ``docs_per_s`` come from the median job;
+4. with ``--trace 1``, mixes untraced jobs with jobs that record spans
+   around the calls into each layer and reads Spark's per-stage metrics of
+   each traced call right after it; then replays the workload's media bytes
+   single-process through the codec and kernel functions, and runs one job
+   at ``local[1]`` (right after the restart, so it includes one Python
+   worker's start-up);
 5. checks every job's committed output against the oracle
    (``perfbench/oracle.py``) and stops every process it started.
 
@@ -51,6 +52,11 @@ if str(ROOT) not in sys.path:
     sys.path.insert(0, str(ROOT))
 
 MAX_SLOTS = 4
+# every run times at least this many jobs; a traced run times three, in the
+# order untraced, traced, untraced, so that a steady drift in job time over
+# the run (the JIT is still warming) cancels out of the tracing overhead
+MIN_JOBS = 2
+MIN_TRACED_RUN_JOBS = 3
 
 
 def parse_args(argv=None):
@@ -184,13 +190,19 @@ def setup_phase(wl, slots: int, extra: dict, tables: Path):
     return spark, (t1 - t0, time.perf_counter() - t1, passes)
 
 
-def timed_phase(spark, wl, seconds: float, tables: Path, tracer=None) -> list[dict]:
+def timed_phase(spark, wl, seconds: float, tables: Path, tracer=None,
+                min_jobs: int = MIN_JOBS, slots: int = 1) -> list[dict]:
     """Closed loop, one caller: jobs back to back until about ``seconds``
-    have passed (a job starts only if half of the median job still fits).
+    have passed (a job starts only if half of the median job still fits)
+    and at least ``min_jobs`` jobs have run.
 
     With a ``tracer``, every second job runs with the workload's layer
-    patches and a ``job`` span, so traced and untraced jobs alternate under
-    the same conditions and their medians give the tracing overhead."""
+    patches and a ``job`` span, so traced and untraced jobs run under
+    the same conditions and their medians give the tracing overhead; each
+    traced job's Spark-side metrics are read as soon as it has returned
+    (Spark's status store forgets old stages)."""
+    from perfbench.trace import spark_call_stats
+
     sc = spark.sparkContext
     jobs: list[dict] = []
     t_start = time.perf_counter()
@@ -201,6 +213,7 @@ def timed_phase(spark, wl, seconds: float, tables: Path, tracer=None) -> list[di
         group = f"perfbench-{tables.name}-{i}"
         sc.setJobGroup(group, group)
         counts, error = None, None
+        collect_garbage(spark)
         if traced:
             wl.trace_patches(tracer)
         t0 = time.perf_counter()
@@ -217,45 +230,49 @@ def timed_phase(spark, wl, seconds: float, tables: Path, tracer=None) -> list[di
             seconds_taken = time.perf_counter() - t0
             if traced:
                 tracer.unpatch_all()
-        jobs.append({"table": str(table), "group": group, "error": error, "traced": traced,
-                     "seconds": seconds_taken, "counts": counts})
+        job = {"table": str(table), "error": error, "traced": traced,
+               "seconds": seconds_taken, "counts": counts}
+        if traced and not error:
+            job["spark"] = call_summary(spark_call_stats(spark, group), seconds_taken, slots)
+        jobs.append(job)
         elapsed = time.perf_counter() - t_start
         med = _median([j["seconds"] for j in jobs])
-        if elapsed + 0.5 * med >= seconds and (tracer is None or len(jobs) >= 2):
+        if len(jobs) >= min_jobs and elapsed + 0.5 * med >= seconds:
             break
     sc.setLocalProperty("spark.jobGroup.id", None)
     return jobs
 
 
-def spark_side(spark, jobs: list[dict], slots: int) -> dict:
-    """Per-call Spark metrics (medians over the traced calls)."""
-    from perfbench.trace import spark_call_stats
+def collect_garbage(spark) -> None:
+    """Untimed, before each job: collect garbage in the driver JVM and in
+    Python, so that no job pays for the garbage of the one before it."""
+    import gc
 
-    calls = []
-    for j in jobs:
-        if j["error"]:
-            continue
-        st = spark_call_stats(spark, j["group"])
-        kernel = [s for s in st["stages"] if s["kernel"]]
-        other = [s for s in st["stages"] if not s["kernel"]]
-        task_ms = [t for s in kernel for t in s["task_ms"]]
-        busy = sum(s["run_s"] for s in st["stages"])
-        calls.append({
-            "jobs": st["jobs"],
-            "stages": len(st["stages"]),
-            "tasks": sum(s["tasks"] for s in st["stages"]),
-            "busy_s": busy,
-            "kernel_busy_s": sum(s["run_s"] for s in kernel),
-            "other_busy_s": sum(s["run_s"] for s in other),
-            "slot_busy_frac": busy / (slots * j["seconds"]),
-            "kernel_task_skew": (max(task_ms) / statistics.median(task_ms)
-                                 if task_ms and statistics.median(task_ms) > 0 else 0.0),
-            "shuffle_write_bytes": sum(s["shuffle_write_bytes"] for s in st["stages"]),
-            "shuffle_read_bytes": sum(s["shuffle_read_bytes"] for s in st["stages"]),
-            "output_bytes": sum(s["output_bytes"] for s in st["stages"]),
-        })
-    keys = calls[0].keys() if calls else []
-    return {"calls": calls, **{k: _median([c[k] for c in calls]) for k in keys}}
+    spark.sparkContext._jvm.System.gc()
+    gc.collect()
+
+
+def call_summary(st: dict, seconds: float, slots: int) -> dict:
+    """One call's Spark-side metrics from :func:`trace.spark_call_stats`."""
+    stages = st["stages"]
+    kernel = [s for s in stages if s["kernel"]]
+    task_ms = [t for s in kernel for t in s["task_ms"]]
+    busy = sum(s["run_s"] for s in stages)
+    return {
+        "jobs": st["jobs"],
+        "stages": len(stages),
+        "tasks": sum(s["tasks"] for s in stages),
+        "busy_s": busy,
+        "kernel_busy_s": sum(s["run_s"] for s in kernel),
+        "other_busy_s": busy - sum(s["run_s"] for s in kernel),
+        "slot_busy_frac": busy / (slots * seconds),
+        "stage_cover_frac": st["stage_cover_s"] / seconds,
+        "kernel_task_skew": (max(task_ms) / statistics.median(task_ms)
+                             if task_ms and statistics.median(task_ms) > 0 else 0.0),
+        "shuffle_write_bytes": sum(s["shuffle_write_bytes"] for s in stages),
+        "shuffle_read_bytes": sum(s["shuffle_read_bytes"] for s in stages),
+        "output_bytes": sum(s["output_bytes"] for s in stages),
+    }
 
 
 KERNEL_CALLS = (
@@ -376,56 +393,50 @@ def main(argv=None) -> int:
             else:
                 with tracer.span("setup"):
                     spark, setup = setup_phase(wl, slots, extra, run_dir)
-            jobs = timed_phase(spark, wl, args.seconds, run_dir / "untraced")
+            jobs = timed_phase(spark, wl, args.seconds, run_dir / "timed", tracer,
+                               MIN_TRACED_RUN_JOBS if tracer else MIN_JOBS, slots)
         phases["timed"] = time.perf_counter()
-        all_jobs = list(jobs)
-        checks: list[dict] = []
         expected = wl.expected(slots)
         phases["oracle"] = time.perf_counter()
+        checks = [wl.check(spark, j["table"], expected, tracer if j["traced"] else None)
+                  for j in jobs if not j["error"]]
+        all_jobs = list(jobs)
         if tracer is not None:
-            mixed = timed_phase(spark, wl, args.seconds, run_dir / "traced", tracer)
-            all_jobs += mixed
-            wl.trace_patches(tracer)
-            try:
-                with tracer.span("check"):
-                    checks += [wl.check(spark, j["table"], expected)
-                               for j in mixed if not j["error"]]
-            finally:
-                tracer.unpatch_all()
-            values.update(trace_values(spark, wl, tracer, mixed, slots))
+            values.update(trace_values(spark, wl, tracer, jobs))
             values["scaling_eff"] = 0.0
             if wl.has_media:
                 # scaling: one job at local[1] on the same input
                 spark.stop()
                 spark = start_spark(1, extra)
-                one = timed_phase(spark, wl, 0, run_dir / "local1")
+                one = timed_phase(spark, wl, 0, run_dir / "local1", min_jobs=1)
                 all_jobs += one
                 checks += [wl.check(spark, j["table"], expected)
                            for j in one if not j["error"]]
-                base = _median([j["seconds"] for j in jobs if not j["error"]], 0.0)
+                base = _median([j["seconds"] for j in jobs
+                                if not j["error"] and not j["traced"]], 0.0)
                 if base and not one[0]["error"]:
                     values["scaling_eff"] = one[0]["seconds"] / (slots * base)
-        checks += [wl.check(spark, j["table"], expected) for j in jobs if not j["error"]]
         phases["checked"] = time.perf_counter()
     finally:
         shutdown(spark)
         shutil.rmtree(run_dir, ignore_errors=True)
     phases["stopped"] = time.perf_counter()
 
-    ok_jobs = [j for j in jobs if not j["error"]]
+    # the metrics of the workload's own job come from untraced jobs only
+    ok_jobs = [j for j in jobs if not j["error"] and not j["traced"]]
     times = [j["seconds"] for j in ok_jobs]
-    timed_s = sum(j["seconds"] for j in jobs)
+    job_s = _median(times)
     n_checked = sum(c["checked"] for c in checks)
     n_wrong = sum(c["wrong"] for c in checks)
     media_attempted = sum(c.get("media", 0) for c in checks)
     media_failed = sum(c.get("failures", 0) for c in checks)
     errors = sum(1 for j in all_jobs if j["error"])
     values.update({
-        "docs_per_s": sum(j["counts"]["docs"] for j in ok_jobs) / timed_s,
-        "job_s": _median(times),
+        "docs_per_s": meta["docs"] / job_s if job_s else 0.0,
+        "job_s": job_s,
         "setup_s": setup[0] + setup[1],
         "peak_rss_mb": rss.peak_bytes / 2**20,
-        "media_per_s": sum(j["counts"]["media"] for j in ok_jobs) / timed_s,
+        "media_per_s": meta["media_spans"] / job_s if job_s else 0.0,
         "media_fail_frac": media_failed / media_attempted if media_attempted else 0.0,
         "wrong_output_frac": n_wrong / n_checked if n_checked else 1.0,
         "error_frac": errors / len(all_jobs),
@@ -455,14 +466,15 @@ def main(argv=None) -> int:
     return 0 if correct else 1
 
 
-def trace_values(spark, wl, tracer, mixed: list[dict], slots: int) -> dict:
-    """Per-layer metrics of the traced run; ``mixed`` alternates untraced
-    and traced jobs."""
+def trace_values(spark, wl, tracer, jobs: list[dict]) -> dict:
+    """Per-layer metrics of the traced run; ``jobs`` mixes untraced and
+    traced jobs."""
     from red_seal_ocr_spark.sources.snapshot import current_snapshot
 
-    traced = [j for j in mixed if j["traced"]]
-    untraced = [j for j in mixed if not j["traced"]]
-    side = spark_side(spark, traced, slots)
+    traced = [j for j in jobs if j["traced"] and not j["error"]]
+    untraced = [j for j in jobs if not j["traced"] and not j["error"]]
+    calls = [j["spark"] for j in traced]
+    side = {k: _median([c[k] for c in calls]) for k in (calls[0] if calls else {})}
     extract = {
         "extract.kernel_stage_busy_s": "kernel_busy_s",
         "extract.other_stage_busy_s": "other_busy_s",
@@ -485,12 +497,14 @@ def trace_values(spark, wl, tracer, mixed: list[dict], slots: int) -> dict:
     v.update({
         "curate.verified_over_candidate_pairs": 0.0,
         "snapshot.commit_s": _median(tracer.durations("snapshot.commit_snapshot")),
+        # read_table plus collecting the gate's columns, over committed tables
         "snapshot.read_table_s": _median(tracer.durations("snapshot.read_table")),
         "snapshot.manifest_bytes": 0,
     })
-    done = [j for j in traced if not j["error"]]
-    if done:
-        table = done[-1]["table"]
+    for key in ("stage_cover_frac", "slot_busy_frac"):
+        tracer.count(f"spark.{key}.median", side.get(key, 0.0))
+    if traced:
+        table = traced[-1]["table"]
         snap = current_snapshot(table)
         if snap is not None:
             v["snapshot.manifest_bytes"] = (
@@ -507,9 +521,9 @@ def trace_values(spark, wl, tracer, mixed: list[dict], slots: int) -> dict:
                  "kernel.mask_ms", "kernel.morph_ms", "kernel.components_ms",
                  "kernel.ocr_ms", "kernel.ok_frac", "kernel.components_per_image"):
         v[name] = replay.get(name, 0.0)
-    base = _median([j["seconds"] for j in untraced if not j["error"]], 1.0)
-    v["trace_overhead_frac"] = (_median([j["seconds"] for j in done], base) - base) / base
-    tracer.count("spark.calls", len(side.get("calls", [])))
+    base = _median([j["seconds"] for j in untraced], 1.0)
+    v["trace_overhead_frac"] = (_median([j["seconds"] for j in traced], base) - base) / base
+    tracer.count("spark.calls", len(calls))
     return v
 
 

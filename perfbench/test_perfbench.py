@@ -58,17 +58,44 @@ def test_seal_corpus_shape_is_fixed():
         assert len(heavy) == max(1, round(inputs.SEAL_HEAVY_SHARE * inputs.SEAL_DOCS))
 
 
+def test_curate_corpus_has_the_documents_table_shape():
+    for seed in (1, 2):
+        rows = inputs.curate_documents_rows(seed)
+        assert sorted(r["doc_id"] for r in rows) == list(range(inputs.CURATE_DOCS))
+        lo, hi = inputs.CURATE_TOKENS
+        words = [r["text"].split() for r in rows]
+        near = [w for w in words if w[-1] == "dup"]
+        assert len(near) == round(inputs.CURATE_NEAR_DUP_SHARE * inputs.CURATE_DOCS)
+        assert all(lo <= len(w) <= hi for w in words if w[-1] != "dup")
+        assert all(len(w) > inputs.CURATE_MIN_SOURCE_TOKENS for w in near)
+        assert {t for w in words for t in w} <= set(inputs.CURATE_VOCAB) | {"dup"}
+
+
 def test_curate_funnel_oracle_sees_planted_duplicates():
     rows = inputs.curate_documents_rows(4)
     funnel, kept = oracle.reference_funnel(rows)
     n = inputs.CURATE_DOCS
-    n_low = round(inputs.CURATE_LOW_QUALITY_SHARE * n)
-    n_exact = round(inputs.CURATE_EXACT_DUP_SHARE * n)
-    n_near = round(inputs.CURATE_NEAR_DUP_SHARE * n)
-    assert funnel["0_input"] == funnel["1_lang"] == n
-    assert funnel["2_quality"] == n - n_low
-    assert funnel["3_exact_dedup"] == n - n_low - n_exact
-    assert funnel["4_near_dedup"] == len(kept) == n - n_low - n_exact - n_near
+    near = [r["text"] for r in rows if r["text"].endswith(" dup")]
+    # a source drawn twice gives two identical near duplicates
+    assert funnel["0_input"] == funnel["1_lang"] == funnel["2_quality"] == n
+    assert funnel["3_exact_dedup"] == n - (len(near) - len(set(near)))
+    assert funnel["4_near_dedup"] == len(kept) == n - len(near)
+
+
+def test_near_dedup_survivors_matches_all_pairs():
+    rows = {r["doc_id"]: r["text"] for r in inputs.curate_documents_rows(3, n_docs=120)}
+    sh = {i: oracle.shingles(t) for i, t in rows.items()}
+    parent = {i: i for i in rows}
+
+    def find(x):
+        return x if parent[x] == x else find(parent[x])
+
+    for a in sorted(rows):
+        for b in sorted(rows):
+            if a < b and int(100 * len(sh[a] & sh[b]) / len(sh[a] | sh[b])) >= 80:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+    assert oracle.near_dedup_survivors(rows) == {i for i in rows if find(i) == i}
 
 
 # ---------------------------------------------------------------------------

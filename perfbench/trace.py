@@ -182,13 +182,14 @@ def spark_call_stats(spark, job_group: str) -> dict:
     ``stages`` lists the stages that ran (skipped ones excluded) with their
     executor run time, shuffle / output bytes, task count, whether they
     contain the ``MapInPandas`` (kernel) operator, and task durations of
-    kernel stages.
+    kernel stages.  ``stage_cover_s`` is the wall time during which at least
+    one of them was running; the rest of a call is driver-side work.
     """
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     store = sc._jsc.sc().statusStore()
     job_ids = sorted(tracker.getJobIdsForGroup(job_group))
-    stages = []
+    stages, intervals = [], []
     for job_id in job_ids:
         info = tracker.getJobInfo(job_id)
         for stage_id in (info.stageIds if info else []):
@@ -197,6 +198,8 @@ def spark_call_stats(spark, job_group: str) -> dict:
                 continue
             kernel = "MapInPandas" in _graph_names(
                 store.operationGraphForStage(stage_id).rootCluster(), [])
+            intervals.append((sd.submissionTime().get().getTime(),
+                              sd.completionTime().get().getTime()))
             task_ms = []
             if kernel:
                 tasks = store.taskList(stage_id, sd.attemptId(), sd.numTasks())
@@ -214,4 +217,10 @@ def spark_call_stats(spark, job_group: str) -> dict:
                 "kernel": kernel,
                 "task_ms": task_ms,
             })
-    return {"jobs": len(job_ids), "stages": stages}
+    covered_ms, end = 0, None
+    for lo, hi in sorted(intervals):
+        lo = lo if end is None else max(lo, end)
+        if hi > lo:
+            covered_ms += hi - lo
+            end = hi
+    return {"jobs": len(job_ids), "stages": stages, "stage_cover_s": covered_ms / 1000.0}
