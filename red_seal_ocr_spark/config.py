@@ -142,10 +142,6 @@ class EngineConfig:
     cell_w: int = 5
     cell_h: int = 7
 
-    # --- Spark-side knobs ---
-    arrow_max_records: int = 64  # images inflate ~10x decoded; keep batches small
-    salt_partitions: int = 0     # 0 = derive from spark.sql.shuffle.partitions
-
     @property
     def seal_units_h(self) -> int:
         return self.cell_h + 2 * self.seal_pad_units

@@ -10,7 +10,9 @@ Plan shape (all public DataFrame API, no RDDs, no custom Catalyst rules):
             salting: media-heavy documents are sprayed across partitions,
             so one hot doc can never pin a partition — SURVEY.md section 4
             item 1; also guards the broadcast-join case where the join
-            would otherwise preserve doc-clustered scan partitioning)
+            would otherwise preserve doc-clustered scan partitioning).
+            No bucket count is given: the kernel stage is AQE-sized from
+            shuffled media bytes (see "Kernel task sizing" below)
          -> mapInPandas(kernel)                   (F1-F13, Arrow batches)
          -> groupBy(doc_id): offset->text map of extracted snippets
       -> map-side splice: left-join the snippet maps onto INTACT document
@@ -27,6 +29,19 @@ Scale notes (100 TB / 10^12 docs):
   column-pruned (the media path never reads span text).
 - failed media spans pass through unchanged and are counted per partition
   in the lineage table (north rule failure semantics).
+
+Kernel task sizing: every Python task pays a fixed start-up cost (~0.25 s
+measured on a 4-vCPU VM, mostly pyspark's per-task import-cache reset)
+before it decodes one image, so the kernel stage's task count has to
+follow the work, not a constant.  AQE coalesces the salted buckets by
+shuffled media bytes — which track kernel work, since encoded image
+bytes grow with pixels — to a target of total bytes / slots, capped at
+``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (64 MB): a small
+batch runs about one task per slot, and at 10^12-doc scale each task
+reads at most ~64 MB of evenly hashed media, provided the initial bucket
+count (``spark.sql.shuffle.partitions``, or
+``spark.sql.adaptive.coalescePartitions.initialPartitionNum``) is at
+least media bytes / 64 MB — AQE merges buckets, it never splits them.
 """
 
 from __future__ import annotations
@@ -150,9 +165,9 @@ def extract_documents(
     )
     joined = media_spans.join(media, on="media_ref", how="left")
 
-    # explicit skew handling: salt by span identity, not doc_id
-    salt_n = cfg.salt_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    salted = joined.repartition(salt_n, F.xxhash64("doc_id", "offset"))
+    # explicit skew handling: salt by span identity, not doc_id; no bucket
+    # count, so AQE sizes the kernel stage from shuffled media bytes
+    salted = joined.repartition(F.xxhash64("doc_id", "offset"))
 
     extracted = salted.mapInPandas(
         _kernel_udf(cfg),

@@ -93,9 +93,11 @@ def lsh_signature(vec_col, planes: list[list[float]], bits_per_band: int = 4):
     """
     if len(planes) % bits_per_band:
         raise ValueError("n_bits must be divisible by bits_per_band")
+    # keyed on the exact plane values (and their shape), not their hash:
+    # a collision must never hand back another query's signature
     cache_key = (
-        str(vec_col), bits_per_band,
-        hash(tuple(v for p in planes for v in p)),
+        str(vec_col), bits_per_band, len(planes),
+        tuple(v for p in planes for v in p),
     )
     cached = _SIG_EXPR_CACHE.get(cache_key)
     if cached is not None:
@@ -120,9 +122,10 @@ def lsh_signature(vec_col, planes: list[list[float]], bits_per_band: int = 4):
         # double-literal parser is correctly rounded, so the parsed
         # Literal values — and therefore every downstream fold — are
         # bit-identical to the F.lit form (asserted in
-        # test_dedup_similarity).
+        # test_dedup_similarity).  float() first: under numpy 2 the
+        # repr of a numpy scalar is "np.float64(x)", not a SQL literal.
         lit = F.expr(
-            "array(" + ",".join(f"{v!r}D" for v in plane) + ")"
+            "array(" + ",".join(f"{float(v)!r}D" for v in plane) + ")"
         )
         dot = F.aggregate(
             F.zip_with(vec_col, lit, lambda x, y: x * y),

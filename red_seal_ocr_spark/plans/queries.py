@@ -72,8 +72,17 @@ def _spread(spark: SparkSession, df: DataFrame, path: str,
         _SPREAD_CACHE[path] = parts
     if parts >= target:
         return df
+    local = path.removeprefix("file:")
     try:
-        size = _os.path.getsize(path.removeprefix("file:"))
+        if _os.path.isdir(local):
+            # a Spark-written table is a directory of part files; its own
+            # inode size (~4 KB) would always read as "tiny"
+            size = sum(
+                _os.path.getsize(_os.path.join(root, f))
+                for root, _, files in _os.walk(local) for f in files
+            )
+        else:
+            size = _os.path.getsize(local)
     except OSError:
         size = None  # non-local path: partition-count test already ran
     if size is not None and size < _SPREAD_MIN_BYTES:

@@ -12,6 +12,13 @@ Settings rationale (SURVEY.md section 4 / X-table):
   loaded in a long-lived Python worker.
 - ``OMP_NUM_THREADS=1``: one BLAS thread per Python worker so 32 parallel
   tasks don't oversubscribe cores (X7; reference caps cpu_threads).
+- Coalesce floor 16 KiB (``coalescePartitions.minPartitionSize``): a
+  Python task costs ~0.25 s before it does any work (measured on a 4-vCPU
+  VM: pyspark's per-task ``importlib.invalidate_caches()`` re-reads the
+  ``pyspark.zip`` directory), so the kernel stage must run about one task
+  per slot on a small batch.  Spark's default 1 MB floor would collapse a
+  ~0.5 MB kernel shuffle into ONE task on one slot; 16 KiB lets AQE's
+  parallelism-first target (bytes / slots) decide.
 """
 
 from __future__ import annotations
@@ -46,6 +53,7 @@ def get_spark(app_name: str = "red-seal-ocr-spark", master: str | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")

@@ -11,18 +11,15 @@ os.environ.setdefault("OMP_NUM_THREADS", "1")  # X7: 1 BLAS thread per worker
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from red_seal_ocr_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("red-seal-ocr-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    # the production session (AQE partition sizing, coalesce floor, Arrow
+    # batch cap, worker reuse), at test scale
+    spark = get_spark(
+        "red-seal-ocr-spark-tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra={"spark.driver.memory": "4g"},
     )
     yield spark
     spark.stop()

@@ -45,3 +45,11 @@ def test_yaml_if_available(tmp_path):
 def test_config_is_frozen():
     with pytest.raises(Exception):
         DEFAULT_CONFIG.sat_min = 99  # type: ignore
+
+
+@pytest.mark.parametrize("key", ["salt_partitions", "arrow_max_records"])
+def test_removed_spark_knobs_rejected(key):
+    """Kernel-stage sizing is AQE's and the Arrow batch cap is the
+    session's: neither is an engine setting any more."""
+    with pytest.raises(ValueError, match=key):
+        load_config(**{key: 8})

@@ -1324,3 +1324,50 @@ def test_curate_with_gopher_stage(spark):
     assert not ({98, 99} & kept_ids) and len(kept_ids) == 10
     # downstream schema unchanged: no flag columns leak out
     assert "gopher_pass" not in kept_on.columns
+
+
+def test_lsh_signature_cache_keys_on_exact_planes(spark, monkeypatch):
+    """The signature-expression cache must key on the plane values and
+    their shape, not on hash(): (-1.0, 1.0) and (-2.0, 1.0) have the same
+    CPython tuple hash, and 8 planes of dim 2 flatten to the same values
+    as 4 planes of dim 4."""
+    from red_seal_ocr_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_SIG_EXPR_CACHE", {})
+    vec = spark.createDataFrame([([1.0, 1.5, 1.0, 1.5],)], "v array<double>")
+    col = F.slice("v", 1, 2)
+
+    def sig(planes, c=col):
+        return list(vec.select(
+            similarity.lsh_signature(c, planes, 4).alias("s")
+        ).first().s)
+
+    neg1, neg2 = [[-1.0, 1.0]] * 4, [[-2.0, 1.0]] * 4
+    assert hash(tuple(v for p in neg1 for v in p)) == hash(
+        tuple(v for p in neg2 for v in p))
+    assert sig(neg1) == [15]  # every dot is -1 + 1.5 > 0
+    assert sig(neg2) == [0]   # every dot is -2 + 1.5 < 0
+
+    flat8x2 = [[-1.0, 1.0]] * 8
+    flat4x4 = [[-1.0, 1.0, -1.0, 1.0]] * 4
+    assert len(sig(flat8x2, F.col("v"))) == 2
+    assert len(sig(flat4x4, F.col("v"))) == 1
+
+
+def test_lsh_signature_accepts_numpy_scalars(spark, monkeypatch):
+    """Plane values are coerced to float before they are printed as SQL
+    literals: under numpy 2, repr(np.float64(x)) is "np.float64(x)"."""
+    from red_seal_ocr_spark.operators import similarity
+
+    class Np2Float(float):
+        def __repr__(self):
+            return f"np.float64({float(self)!r})"
+
+    monkeypatch.setattr(similarity, "_SIG_EXPR_CACHE", {})
+    vec = spark.createDataFrame([([0.25, -0.5],)], "v array<double>")
+    planes = [[0.1, 0.3], [-0.7, 0.2], [0.5, 0.5], [-0.1, -0.9]]
+    wrapped = [[Np2Float(v) for v in p] for p in planes]
+    got = vec.select(similarity.lsh_signature(F.col("v"), wrapped, 4).alias("s"))
+    monkeypatch.setattr(similarity, "_SIG_EXPR_CACHE", {})
+    want = vec.select(similarity.lsh_signature(F.col("v"), planes, 4).alias("s"))
+    assert got.first().s == want.first().s

@@ -3,7 +3,6 @@ invariance (SURVEY.md section 5, test strategies #2 and #4)."""
 
 import pytest
 
-from red_seal_ocr_spark.config import EngineConfig
 from red_seal_ocr_spark.operators.extract import extract_documents
 from red_seal_ocr_spark.oracle import extract_failure_count, reference_extract
 from red_seal_ocr_spark.sources.datagen import build_local
@@ -53,20 +52,66 @@ def test_metric_columns_consistent(spark_out):
 
 
 def test_salt_partition_invariance(spark, oracle_out):
-    """Output is identical under degenerate and fine salting (SURVEY.md
-    hard-parts list: salting must not leak into grouping)."""
+    """Output is identical under degenerate and fine salting, with and
+    without AQE coalescing (SURVEY.md hard-parts list: salting must not
+    leak into grouping)."""
     spans_want, _ = oracle_out
     docs = documents_df(spark, 8)
     media = media_df(spark, 8)
-    for salt_n in (1, 7):
-        out = extract_documents(
-            spark, docs, media, EngineConfig(salt_partitions=salt_n)
-        ).collect()
+    settings = [
+        {"spark.sql.shuffle.partitions": "1"},
+        {"spark.sql.shuffle.partitions": "7"},
+        {"spark.sql.adaptive.coalescePartitions.enabled": "false"},
+    ]
+    for setting in settings:
+        saved = {k: spark.conf.get(k) for k in setting}
+        try:
+            for k, v in setting.items():
+                spark.conf.set(k, v)
+            out = extract_documents(spark, docs, media).collect()
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+        assert len(out) == 8, setting
         for row in out:
             want = [(s["kind"], s["text"], s["media_ref"], s["offset"])
                     for s in spans_want[row["doc_id"]]]
             got = [(s.kind, s.text, s.media_ref, s.offset) for s in row.spans]
-            assert got == want, (salt_n, row["doc_id"])
+            assert got == want, (setting, row["doc_id"])
+
+
+def test_kernel_stage_tasks_follow_bytes_not_buckets(spark):
+    """Every Python task pays a fixed start-up cost, so the kernel stage's
+    task count must follow the shuffled media bytes, not the salt bucket
+    count.  AQE packs the salted buckets to ~bytes/slots per task; its
+    greedy packing may leave one short tail task, but any two adjacent
+    coalesced partitions hold >= 1.2x the target between them, so a stage
+    never runs more than 2*slots - 1 tasks — whatever the bucket count.
+    (A fixed salt count runs exactly one task per bucket.)"""
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    # inputs split one partition per slot: only the engine's own stages
+    # are under test, not the fixture builder's scan split
+    docs = documents_df(spark, N_DOCS, partitions=slots)
+    media = media_df(spark, N_DOCS, partitions=slots)
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    tracker = sc.statusTracker()
+    for buckets in (2 * slots, 16 * slots):
+        group = f"kernel-stage-tasks-{buckets}"
+        try:
+            spark.conf.set(key, str(buckets))
+            sc.setJobGroup(group, "extract_documents task count")
+            out = extract_documents(spark, docs, media).collect()
+        finally:
+            sc.setJobGroup(None, None)
+            spark.conf.set(key, saved)
+        assert len(out) == N_DOCS
+        infos = [tracker.getStageInfo(s)
+                 for j in tracker.getJobIdsForGroup(group)
+                 for s in tracker.getJobInfo(j).stageIds]
+        tasks = [i.numTasks for i in infos if i is not None]
+        assert tasks and max(tasks) <= 2 * slots - 1, (buckets, tasks)
 
 
 def test_dangling_media_ref_counts_as_failure(spark):

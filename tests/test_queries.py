@@ -116,3 +116,24 @@ def test_all_queries_run_at_smallest_sf(spark):
     for name, fn in sorted(SPARK_QUERIES.items()):
         df = fn(spark, small)
         assert df.count() >= 0, name
+
+
+def test_spread_sizes_a_parquet_directory_by_its_part_files(spark, tmp_path,
+                                                            monkeypatch):
+    """A Spark-written table is a directory; the re-spread size gate must
+    sum its part files, not read the directory inode size (~4 KB)."""
+    from red_seal_ocr_spark.plans import queries
+
+    path = str(tmp_path / "documents.parquet")
+    (spark.range(20_000)
+     .selectExpr("id AS doc_id", "sha2(CAST(id AS STRING), 256) AS text")
+     .coalesce(1).write.parquet(path))
+    part_bytes = sum(f.stat().st_size for f in Path(path).glob("part-*"))
+    assert part_bytes > 64 << 10 > os.path.getsize(path)
+
+    monkeypatch.setattr(queries, "_SPREAD_CACHE", {})
+    monkeypatch.setattr(queries, "_SPREAD_MIN_BYTES", 32 << 10)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    spread = queries._spread(spark, df, path, "doc_id")
+    assert spread.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
